@@ -537,20 +537,6 @@ object ZedFunctions {
     catch { case _: Exception => null }
   }
 
-  private def leadingOnes(b: Array[Byte]): Int = {
-    var n = 0
-    var i = 0
-    while (i < b.length) {
-      var bit = 7
-      while (bit >= 0) {
-        if (((b(i) >> bit) & 1) == 1) n += 1 else return n
-        bit -= 1
-      }
-      i += 1
-    }
-    n
-  }
-
   private def maskBytes(len: Int, bits: Int): Array[Byte] = {
     val out = new Array[Byte](len)
     for (i <- out.indices) {
@@ -561,25 +547,7 @@ object ZedFunctions {
   }
 
   /** Canonical text of an address (compressed ipv6, like the reference). */
-  private def ipText(b: Array[Byte]): String =
-    if (b.length == 4) b.map(_ & 0xff).mkString(".")
-    else {
-      val groups = b.grouped(2).map(p => ((p(0) & 0xff) << 8) | (p(1) & 0xff)).toArray
-      // longest zero run → "::" (RFC 5952)
-      var best = -1; var bestLen = 0; var i = 0
-      while (i < 8) {
-        if (groups(i) == 0) {
-          var j = i; while (j < 8 && groups(j) == 0) j += 1
-          if (j - i > bestLen) { best = i; bestLen = j - i }; i = j
-        } else i += 1
-      }
-      if (bestLen < 2) groups.map(g => Integer.toHexString(g)).mkString(":")
-      else {
-        val l = groups.take(best).map(g => Integer.toHexString(g)).mkString(":")
-        val r = groups.drop(best + bestLen).map(g => Integer.toHexString(g)).mkString(":")
-        l + "::" + r
-      }
-    }
+  private def ipText(b: Array[Byte]): String = graft.sources.ZngIO.addrText(b, net = false)
 
   /** Canonical text of a CIDR net: the address is masked to the prefix
     * (zed renders `1::/8` as `::/8` — netip.Prefix.Masked semantics).
@@ -633,7 +601,7 @@ object ZedFunctions {
           err("network_of: address and mask have different lengths",
             s"{address:$ipS,mask:$mask}")
         else {
-          val bits = leadingOnes(mb)
+          val bits = graft.sources.ZngIO.leadingOnes(mb, 0, mb.length)
           if (!maskBytes(mb.length, bits).sameElements(mb))
             err("network_of: mask is non-contiguous", mask)
           else prefix(bits)

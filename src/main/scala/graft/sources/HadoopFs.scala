@@ -2,7 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -19,6 +22,20 @@ object HadoopFs {
   def confMap(spark: SparkSession): Map[String, String] =
     spark.sparkContext.hadoopConfiguration.iterator().asScala
       .map(e => e.getKey -> e.getValue).toMap
+
+  /** The session's Hadoop configuration as one broadcast, shared by
+    * every scan until the configuration changes: a task reads it instead
+    * of deserializing its own copy of ~1k entries, and a scan does not
+    * pay for a broadcast of its own (the check costs what confMap does).
+    */
+  def sharedConf(spark: SparkSession): Broadcast[SerializableConfiguration] = synchronized {
+    val sc = spark.sparkContext
+    val m = confMap(spark)
+    if (shared == null || (shared._1 ne sc) || shared._2 != m)
+      shared = (sc, m, sc.broadcast(new SerializableConfiguration(confOf(m))))
+    shared._3
+  }
+  private var shared: (SparkContext, Map[String, String], Broadcast[SerializableConfiguration]) = _
 
   private def confOf(m: Map[String, String]): Configuration = {
     val c = new Configuration(false)
@@ -93,9 +110,10 @@ object HadoopFs {
     * pruned scan touches only the byte ranges of the columns it needs
     * (the point of a columnar format on a 100 TB object store).
     */
-  final class RangeReader(conf: Map[String, String], path: String) extends AutoCloseable {
+  final class RangeReader(conf: Configuration, path: String) extends AutoCloseable {
+    def this(conf: Map[String, String], path: String) = this(confOf(conf), path)
     private val p = new Path(path)
-    private val in = p.getFileSystem(confOf(conf)).open(p)
+    private val in = p.getFileSystem(conf).open(p)
     def read(pos: Long, len: Int): Array[Byte] = {
       val buf = new Array[Byte](len)
       in.readFully(pos, buf)
@@ -116,9 +134,12 @@ object HadoopFs {
   /** Executor-side: read a file fully (zng streams decode from a byte
     * array; part files are bounded by the writing partition's size).
     */
-  def readAll(conf: Map[String, String], path: String): Array[Byte] = {
+  def readAll(conf: Map[String, String], path: String): Array[Byte] =
+    readAll(confOf(conf), path)
+
+  def readAll(conf: Configuration, path: String): Array[Byte] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(confOf(conf))
+    val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     try {
       val len = fs.getFileStatus(p).getLen

@@ -1013,22 +1013,16 @@ object VngIO {
         }
       case Prim("string") | Prim("bytes") =>
         (v, n) => { v.appendByteArray(c.buf, c.pos, n); c.pos += n; () }
-      case Prim("ip") =>
+      case Prim(p @ ("ip" | "net")) =>
+        val text = new Array[Byte](ZngIO.AddrTextMax)
         (v, n) => {
-          val s = ZngIO.ipText(c.bytes(n)).getBytes(utf8)
-          v.appendByteArray(s, 0, s.length); ()
-        }
-      case Prim("net") =>
-        (v, n) => {
-          val b = c.bytes(n)
-          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-          val s = (ZngIO.ipText(addr) + "/" + ZngIO.leadingOnes(mask)).getBytes(utf8)
-          v.appendByteArray(s, 0, s.length); ()
+          val end = ZngIO.writeAddrText(c.buf, c.pos, n, p == "net", text, 0)
+          c.pos += n
+          v.appendByteArray(text, 0, end); ()
         }
       case EnumT(_) =>
         (v, n) => {
-          val sym = enumSyms(ZngIO.unsignedOf(c.bytes(n)).toInt)
+          val sym = enumSyms(c.unsignedAt(n).toInt)
           v.appendByteArray(sym, 0, sym.length); ()
         }
       case other => throw new IllegalStateException(s"vng vectorized fill: $other")

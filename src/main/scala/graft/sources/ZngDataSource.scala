@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -9,6 +10,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 batch source for ZNG streams — homogeneous or
   * heterogeneous (ZngIO.read routes every stream here after pass-1
@@ -17,9 +19,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * shape gets its own direct builder projecting BY NAME into the merged
   * frame, so mixed-shape zeek/zng data — the reference's normal input —
   * decodes at the same per-row cost as a single-shape stream. Column
-  * pruning reaches the decoder (a pruned-away field is skipped via its
-  * length tag), so `count()`-class queries cost I/O plus tag
-  * arithmetic, like pass 1.
+  * pruning reaches the decoder, nested records included: a pruned-away
+  * field or sub-field is skipped via its length tag and a pruned record
+  * decodes only its requested sub-fields (`count() by id.orig_h` reads
+  * one field of `id`), so `count()`-class queries cost I/O plus tag
+  * arithmetic, like pass 1. Leaves decode off the frame's bytes; only
+  * sets, maps, unions, errors and type values go through the value
+  * model.
   *
   * String predicates push down as a pre-decode FRAME prefilter (the
   * reference's BufferFilter, runtime/sam/expr/bufferfilter.go): a frame
@@ -150,7 +156,7 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
       val counts = Option(options.get("counts"))
         .map(_.split('\n').toIndexedSeq.filter(_.nonEmpty).map(_.toLong))
         .filter(_.length == files.length)
-      return new ZngCountScan(files, counts, countAggs, HadoopFs.confMap(SparkSession.active))
+      return new ZngCountScan(files, counts, countAggs)
     }
     val enabled = SparkSession.active.conf
       .getOption("graft.zng.prefilter").forall(_.toBoolean)
@@ -204,7 +210,6 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
       cleaned = StructType(full.fields.filterNot(_.name == graft.operators.Het.typeTag)),
       required = required,
       prefilter = if (enabled) BufferFilter.fromFilters(pushed, stringCols) else None,
-      confMap = HadoopFs.confMap(SparkSession.active),
       stats = ZngDataSource.statsOf(options, files),
       columnar = vectorOk)
   }
@@ -232,8 +237,7 @@ private class FramesReadMetric extends CustomSumMetric {
 private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
     sizes: Option[Seq[Long]], nsTime: Boolean,
     cleaned: StructType, required: StructType, prefilter: Option[BufferFilter],
-    confMap: Map[String, String], stats: (Option[Long], Option[Long]),
-    columnar: Boolean)
+    stats: (Option[Long], Option[Long]), columnar: Boolean)
     extends Scan with Batch with SupportsReportStatistics {
   override def estimateStatistics(): Statistics = new Statistics {
     override def numRows(): java.util.OptionalLong =
@@ -266,7 +270,8 @@ private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
       }
     }.toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZngReaderFactory(nsTime, cleaned, required, prefilter, confMap, columnar)
+    new ZngReaderFactory(nsTime, cleaned, required, prefilter,
+      HadoopFs.sharedConf(SparkSession.active), columnar)
 }
 
 /** count(*) pushdown: one partial-count row per file. Counts come free
@@ -275,8 +280,8 @@ private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
   */
 private case class ZngCountPartition(file: String, count: Long) extends InputPartition
 
-private class ZngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs: Int,
-    confMap: Map[String, String]) extends Scan with Batch {
+private class ZngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs: Int)
+    extends Scan with Batch {
   override def readSchema(): StructType =
     StructType((1 to nAggs).map(i =>
       org.apache.spark.sql.types.StructField(s"count$i",
@@ -288,13 +293,14 @@ private class ZngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs:
       ZngCountPartition(f, counts.map(_(i)).getOrElse(-1L)): InputPartition
     }.toArray
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = confMap
+    // the Hadoop conf ships only when some file must be scanned
+    val conf = if (counts.isDefined) None else Some(HadoopFs.sharedConf(SparkSession.active))
     val n = nAggs
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[ZngCountPartition]
       val c =
         if (p.count >= 0) p.count
-        else ZngIO.scanMeta(Gzip.maybeGunzip(HadoopFs.readAll(conf, p.file)), 0L)._2
+        else ZngIO.scanMeta(Gzip.maybeGunzip(HadoopFs.readAll(conf.get.value.value, p.file)), 0L)._2
       new PartitionReader[InternalRow] {
         private var emitted = false
         override def next(): Boolean = { val first = !emitted; emitted = true; first }
@@ -307,62 +313,67 @@ private class ZngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs:
   }
 }
 
+/** A split's reader, decoding on the first next(): DataSourceRDD takes
+  * the task's bytes-read baseline after createReader returns, so a split
+  * read there would not count as the scan's input bytes.
+  */
+private abstract class ZngPartitionReader[T] extends PartitionReader[T] {
+  protected val stats = new ZngIO.FrameStats
+  protected def open(): Iterator[T]
+  private var it: Iterator[T] = _
+  private var cur: T = _
+  override def next(): Boolean = {
+    if (it == null) it = open()
+    val h = it.hasNext
+    if (h) cur = it.next()
+    h
+  }
+  override def get(): T = cur
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    new CustomTaskMetric {
+      override def name(): String = "framesSkipped"
+      override def value(): Long = stats.skipped
+    },
+    new CustomTaskMetric {
+      override def name(): String = "framesRead"
+      override def value(): Long = stats.read
+    })
+}
+
 private class ZngReaderFactory(nsTime: Boolean, cleaned: StructType,
     required: StructType, prefilter: Option[BufferFilter],
-    confMap: Map[String, String], columnar: Boolean) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration], columnar: Boolean)
+    extends PartitionReaderFactory {
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
   private def bytesOf(partition: InputPartition): Array[Byte] = {
     val p = partition.asInstanceOf[ZngPartition]
-    if (p.length < 0) Gzip.maybeGunzip(HadoopFs.readAll(confMap, p.file))
+    if (p.length < 0) Gzip.maybeGunzip(HadoopFs.readAll(conf.value.value, p.file))
     else {
-      val rr = new HadoopFs.RangeReader(confMap, p.file)
+      val rr = new HadoopFs.RangeReader(conf.value.value, p.file)
       try rr.read(p.start, p.length.toInt) finally rr.close()
     }
   }
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val stats = new ZngIO.FrameStats
-    val (it, closeFn) =
-      ZngIO.decodeToColumnarBatches(bytesOf(partition), cleaned, required, nsTime,
-        prefilter, stats)
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) batch = it.next(); h }
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
+    new ZngPartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+      private var closeFn: () => Unit = () => ()
+      protected def open() = {
+        val (it, cl) = ZngIO.decodeToColumnarBatches(bytesOf(partition), cleaned, required,
+          nsTime, prefilter, stats)
+        closeFn = cl
+        it
+      }
       override def close(): Unit = closeFn()
-      override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-        new CustomTaskMetric {
-          override def name(): String = "framesSkipped"
-          override def value(): Long = stats.skipped
-        },
-        new CustomTaskMetric {
-          override def name(): String = "framesRead"
-          override def value(): Long = stats.read
-        })
     }
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val bytes = bytesOf(partition)
-    val stats = new ZngIO.FrameStats
-    val it = ZngIO.decodeToInternalRows(bytes, cleaned, required, nsTime,
-      prefilter, stats)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) row = it.next(); h }
-      override def get(): InternalRow = row
+    new ZngPartitionReader[InternalRow] {
+      protected def open() = ZngIO.decodeToInternalRows(bytesOf(partition), cleaned, required,
+        nsTime, prefilter, stats)
       override def close(): Unit = ()
-      override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-        new CustomTaskMetric {
-          override def name(): String = "framesSkipped"
-          override def value(): Long = stats.skipped
-        },
-        new CustomTaskMetric {
-          override def name(): String = "framesRead"
-          override def value(): Long = stats.read
-        })
     }
   }
 }

@@ -1046,37 +1046,84 @@ object ZngIO {
     u
   }
 
-  /** IPv4 dotted quad / IPv6 RFC 5952 compressed text from 4/16 raw bytes. */
-  private[sources] def ipText(b: Array[Byte]): String =
-    if (b.length == 4) b.map(_ & 0xff).mkString(".")
-    else {
-      val groups = Array.tabulate(8)(i => ((b(2 * i) & 0xff) << 8) | (b(2 * i + 1) & 0xff))
-      // find longest run of zero groups (length >= 2) for '::'
-      var bestStart = -1; var bestLen = 0; var i = 0
+  /** Longest address text writeAddrText emits: an IPv6 net, 39 + "/128". */
+  private[graft] val AddrTextMax = 43
+  private val hexDigits = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** The one ip/net text kernel: writes the canonical text of the `n` wire
+    * bytes at `pos` as ASCII into `out` at `off` and returns the end
+    * offset — no String, no boxing. An ip body is 4 bytes (dotted quad) or
+    * 16 (RFC 5952: lower-case hex without leading zeros, the first
+    * longest run of two or more zero groups as `::`). A net body is the
+    * address then an equal-length mask (primitive.go DecodeNet), written
+    * as `addr/bits`.
+    */
+  private[graft] def writeAddrText(b: Array[Byte], pos: Int, n: Int, net: Boolean,
+      out: Array[Byte], off: Int): Int = {
+    val len = if (net) n / 2 else n
+    require(len == 4 || len == 16, s"zng: ${if (net) "net" else "ip"} body of $n bytes")
+    var o = off
+    if (len == 4) {
+      var i = 0
+      while (i < 4) {
+        if (i > 0) { out(o) = '.'; o += 1 }
+        o = writeDecimal(b(pos + i) & 0xff, out, o)
+        i += 1
+      }
+    } else {
+      def group(i: Int): Int = ((b(pos + 2 * i) & 0xff) << 8) | (b(pos + 2 * i + 1) & 0xff)
+      var best = -1; var bestLen = 0; var i = 0
       while (i < 8) {
-        if (groups(i) == 0) {
-          var j = i; while (j < 8 && groups(j) == 0) j += 1
-          if (j - i > bestLen) { bestStart = i; bestLen = j - i }
+        if (group(i) == 0) {
+          var j = i; while (j < 8 && group(j) == 0) j += 1
+          if (j - i > bestLen) { best = i; bestLen = j - i }
           i = j
         } else i += 1
       }
-      if (bestLen < 2) groups.map(Integer.toHexString).mkString(":")
-      else {
-        val pre = groups.take(bestStart).map(Integer.toHexString).mkString(":")
-        val post = groups.drop(bestStart + bestLen).map(Integer.toHexString).mkString(":")
-        pre + "::" + post
+      if (bestLen < 2) { best = -1; bestLen = 0 }
+      i = 0
+      while (i < 8) {
+        if (i == best) { out(o) = ':'; out(o + 1) = ':'; o += 2; i += bestLen }
+        else {
+          if (i > 0 && i != best + bestLen) { out(o) = ':'; o += 1 }
+          val g = group(i)
+          var shift = 12
+          while (shift > 0 && ((g >> shift) & 0xf) == 0) shift -= 4
+          while (shift >= 0) { out(o) = hexDigits((g >> shift) & 0xf); o += 1; shift -= 4 }
+          i += 1
+        }
       }
     }
+    if (net) { out(o) = '/'; o = writeDecimal(leadingOnes(b, pos + len, len), out, o + 1) }
+    o
+  }
 
-  private[sources] def leadingOnes(mask: Array[Byte]): Int = {
-    var n = 0; var i = 0; var stop = false
-    while (i < mask.length && !stop) {
+  /** Decimal digits of 0 <= v < 1000. */
+  private def writeDecimal(v: Int, out: Array[Byte], off: Int): Int = {
+    var o = off
+    if (v >= 100) { out(o) = ('0' + v / 100).toByte; o += 1 }
+    if (v >= 10) { out(o) = ('0' + v / 10 % 10).toByte; o += 1 }
+    out(o) = ('0' + v % 10).toByte
+    o + 1
+  }
+
+  /** writeAddrText of a whole ip (net = false) or net body, as a String. */
+  private[graft] def addrText(b: Array[Byte], net: Boolean): String = {
+    val out = new Array[Byte](AddrTextMax)
+    new String(out, 0, writeAddrText(b, 0, b.length, net, out, 0),
+      java.nio.charset.StandardCharsets.US_ASCII)
+  }
+
+  /** Prefix length of a CIDR mask: its leading one bits. */
+  private[graft] def leadingOnes(mask: Array[Byte], pos: Int, n: Int): Int = {
+    var ones = 0; var i = pos; var stop = false
+    while (i < pos + n && !stop) {
       val b = mask(i) & 0xff
-      if (b == 0xff) n += 8
-      else { n += Integer.numberOfLeadingZeros(~(b << 24)); stop = true }
+      if (b == 0xff) ones += 8
+      else { ones += Integer.numberOfLeadingZeros(~(b << 24)); stop = true }
       i += 1
     }
-    n
+    ones
   }
 
   private def esc(s: String): String =
@@ -1112,12 +1159,8 @@ object ZngIO {
           case ID_BYTES => "0x" + b.map(x => f"${x & 0xff}%02x").mkString
           case ID_STRING => "\"" + esc(new String(b, "UTF-8")) + "\""
           case ID_NULL => "null"
-          case ID_IP => ipText(b)
-          case ID_NET =>
-            // addr bytes then mask bytes (primitive.go DecodeNet)
-            val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-            val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-            ipText(addr) + "/" + leadingOnes(mask)
+          case ID_IP => addrText(b, net = false)
+          case ID_NET => addrText(b, net = true)
           case other =>
             throw new IllegalArgumentException(
               s"zng: primitive type id $other (float16/128/256, decimal, type) not supported")
@@ -1176,197 +1219,30 @@ object ZngIO {
     */
   def decodeToZson(bytes: Array[Byte]): Iterator[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val c = new Cursor(bytes, 0)
-    var types = scala.collection.mutable.ArrayBuffer.empty[ZT] // ids from 30
-    def typeOf(id: Int): ZT =
-      if (id < 30) ZPrim(id) else types(id - 30)
-    def readCounted(cc: Cursor): String = {
-      val n = cc.uvarint().toInt
-      new String(cc.bytes(n), "UTF-8")
-    }
-    while (!c.done) {
-      val code = c.u8()
-      if (code == 0xff) {
-        types = scala.collection.mutable.ArrayBuffer.empty[ZT] // new stream
-      } else {
-        require((code & 0x80) == 0, "zng: unsupported version bit")
-        val compressed = (code & 0x40) != 0
-        val t = (code >> 4) & 0x3
-        val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
-        val raw = c.bytes(len)
-        val payload =
-          if (!compressed) raw
-          else {
-            val pc = new Cursor(raw, 0)
-            val format = pc.u8()
-            require(format == 0, s"zng: unknown compression format $format")
-            val usize = pc.uvarint().toInt
-            val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-            val dec = net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-            val buf = new Array[Byte](usize)
-            dec.decompress(comp, 0, buf, 0, usize)
-            buf
-          }
-        t match {
-          case 0 => // types frame
-            val tc = new Cursor(payload, 0)
-            while (!tc.done) {
-              tc.u8() match {
-                case 0x00 =>
-                  val nf = tc.uvarint().toInt
-                  val fields = (0 until nf).map { _ =>
-                    val name = readCounted(tc)
-                    val tid = tc.uvarint().toInt
-                    name -> typeOf(tid)
-                  }
-                  types += ZRecord(fields)
-                case 0x01 => types += ZArray(typeOf(tc.uvarint().toInt))
-                case 0x02 => types += ZSet(typeOf(tc.uvarint().toInt))
-                case 0x03 =>
-                  val k = typeOf(tc.uvarint().toInt)
-                  types += ZMap(k, typeOf(tc.uvarint().toInt))
-                case 0x04 =>
-                  val nt = tc.uvarint().toInt
-                  types += ZUnion((0 until nt).map(_ => typeOf(tc.uvarint().toInt)))
-                case 0x05 =>
-                  val ne = tc.uvarint().toInt
-                  types += ZEnum((0 until ne).map(_ => readCounted(tc)))
-                case 0x06 => types += ZError(typeOf(tc.uvarint().toInt))
-                case 0x07 =>
-                  val name = readCounted(tc)
-                  types += ZNamed(name, typeOf(tc.uvarint().toInt))
-                case other =>
-                  throw new IllegalArgumentException(s"zng: unknown typedef code $other")
-              }
-            }
-          case 1 => // values frame
-            val vc = new Cursor(payload, 0)
-            while (!vc.done) {
-              val tid = vc.uvarint().toInt
-              out += decodeValue(vc, typeOf(tid))
-            }
-          case 2 => // control frame: skip (spec allows)
-          case _ =>
-            throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
-        }
-      }
-    }
+    foreachValue(bytes)((t, c) => out += decodeValue(c, t))
     out.iterator
   }
 
-  // ---- structural decode + value-level writer (shared with VngIO) ------------
-
-  /** Decode a ZNG stream to (type, value) pairs with Scala-native values:
-    * records → ListMap[String, Any], arrays → Seq[Any], ints → Long,
-    * floats → Double, strings → String, null → null. Used for metadata
-    * streams (VNG reassembly/trailer) where structure, not text, is needed.
+  /** Walk a ZNG byte stream (possibly several concatenated streams)
+    * calling f(type, cursor) positioned at each value.
     */
-  private[sources] def decodeToValues(bytes: Array[Byte]): Seq[(ZT, Any)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(ZT, Any)]
-    foreachValue(bytes) { (t, cursor) => out += ((t, decodeValueAny(cursor, t))) }
-    out.toSeq
-  }
-
-  private[sources] def decodeValueAny(c: Cursor, t: ZT): Any = {
-    val tag = c.uvarint()
-    if (tag == 0) return null
-    val n = (tag - 1).toInt
-    t match {
-      case ZNamed(_, inner) => c.pos -= sizeOfTag(tag); decodeValueAny(c, inner)
-      case ZPrim(id) =>
-        val b = c.bytes(n)
-        id match {
-          case i if i >= 0 && i <= 5 => unsignedOf(b)
-          case i if (i >= 6 && i <= 11) || i == 12 || i == ID_TIME => signedOf(b)
-          case ID_FLOAT32 => java.lang.Float.intBitsToFloat(unsignedOf(b).toInt).toDouble
-          case ID_FLOAT64 => java.lang.Double.longBitsToDouble(unsignedOf(b))
-          case ID_BOOL => b.nonEmpty && b(0) == 1
-          case ID_STRING => new String(b, "UTF-8")
-          case ID_BYTES => b
-          case _ => null
-        }
-      case ZRecord(fields) =>
-        val inner = new Cursor(c.bytes(n), 0)
-        scala.collection.immutable.ListMap(fields.map { case (name, ft) =>
-          name -> decodeValueAny(inner, ft)
-        }: _*)
-      case ZArray(et) =>
-        val inner = new Cursor(c.bytes(n), 0)
-        Iterator.continually(())
-          .takeWhile(_ => !inner.done).map(_ => decodeValueAny(inner, et)).toSeq
-      case other =>
-        // sets/maps/unions are not used in metadata streams
-        c.bytes(n); null
-    }
-  }
-
-  /** Walk a ZNG stream calling f(type, cursor) positioned at each value. */
   private def foreachValue(bytes: Array[Byte])(f: (ZT, Cursor) => Unit): Unit = {
-    // delegate to the frame walker in decodeToZson's shape
     val c = new Cursor(bytes, 0)
     var types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-    def typeOf(id: Int): ZT = if (id < 30) ZPrim(id) else types(id - 30)
-    def readCounted(cc: Cursor): String = {
-      val n = cc.uvarint().toInt
-      new String(cc.bytes(n), "UTF-8")
-    }
     while (!c.done) {
       val code = c.u8()
-      if (code == 0xff) types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-      else {
-        val compressed = (code & 0x40) != 0
-        val t = (code >> 4) & 0x3
-        val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
-        val raw = c.bytes(len)
-        val payload =
-          if (!compressed) raw
-          else {
-            val pc = new Cursor(raw, 0)
-            require(pc.u8() == 0, "zng: unknown compression format")
-            val usize = pc.uvarint().toInt
-            val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-            val buf = new Array[Byte](usize)
-            net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-              .decompress(comp, 0, buf, 0, usize)
-            buf
+      if (code == 0xff) types = scala.collection.mutable.ArrayBuffer.empty[ZT] // new stream
+      else readFrame(c, code) match {
+        case (0, payload) => parseTypedefs(payload, types)
+        case (1, payload) =>
+          val vc = new Cursor(payload, 0)
+          while (!vc.done) {
+            val tid = vc.uvarint().toInt
+            f(if (tid < 30) ZPrim(tid) else types(tid - 30), vc)
           }
-        t match {
-          case 0 =>
-            val tc = new Cursor(payload, 0)
-            while (!tc.done) {
-              tc.u8() match {
-                case 0x00 =>
-                  val nf = tc.uvarint().toInt
-                  types += ZRecord((0 until nf).map { _ =>
-                    val name = readCounted(tc); name -> typeOf(tc.uvarint().toInt)
-                  })
-                case 0x01 => types += ZArray(typeOf(tc.uvarint().toInt))
-                case 0x02 => types += ZSet(typeOf(tc.uvarint().toInt))
-                case 0x03 =>
-                  val k = typeOf(tc.uvarint().toInt)
-                  types += ZMap(k, typeOf(tc.uvarint().toInt))
-                case 0x04 =>
-                  val nt = tc.uvarint().toInt
-                  types += ZUnion((0 until nt).map(_ => typeOf(tc.uvarint().toInt)))
-                case 0x05 =>
-                  val ne = tc.uvarint().toInt
-                  types += ZEnum((0 until ne).map(_ => readCounted(tc)))
-                case 0x06 => types += ZError(typeOf(tc.uvarint().toInt))
-                case 0x07 =>
-                  val name = readCounted(tc)
-                  types += ZNamed(name, typeOf(tc.uvarint().toInt))
-                case other =>
-                  throw new IllegalArgumentException(s"zng: unknown typedef code $other")
-              }
-            }
-          case 1 =>
-            val vc = new Cursor(payload, 0)
-            while (!vc.done) {
-              val tid = vc.uvarint().toInt
-              f(typeOf(tid), vc)
-            }
-          case _ => // control: skip
-        }
+        case (2, _) => // control frame: skip (spec allows)
+        case _ =>
+          throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
       }
     }
   }
@@ -1687,11 +1563,8 @@ object ZngIO {
           case ID_BOOL => VBool(b.nonEmpty && b(0) == 1)
           case ID_BYTES => VBytes(b)
           case ID_STRING => VStr(new String(b, "UTF-8"))
-          case ID_IP => VIp(ipText(b))
-          case ID_NET =>
-            val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-            val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-            VNet(ipText(addr) + "/" + leadingOnes(mask))
+          case ID_IP => VIp(addrText(b, net = false))
+          case ID_NET => VNet(addrText(b, net = true))
           case ID_NULL => VNull(ZType.Prim("null"))
           case 28 => // type VALUE (type.go AppendTypeValue encoding)
             val tv = decodeTypeValue(new Cursor(b, 0), scala.collection.mutable.Map.empty)
@@ -1966,215 +1839,19 @@ object ZngIO {
     (seen.toSeq, i - startIdx, ns)
   }
 
-  /** Build a direct wire→Spark-external decoder for one field: reads the
-    * tag and body off the cursor, returns the external value for `target`
-    * (the same result toExternal(decodeZValue(…)) produces). None when the
-    * type needs the general value-model path (unions, errors, maps, sets —
-    * set normalization reorders elements — uint64, decimals).
-    */
-  private def directFieldDecoder(t: ZT, target: DataType, nsTime: Boolean)
-      : Option[Cursor => Any] = t match {
-    case ZNamed(_, inner) => directFieldDecoder(inner, target, nsTime) // no own tag
-    case ZPrim(id) => id match {
-      case 0 | 1 | 2 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else java.lang.Long.valueOf(unsignedOf(c.bytes((tag - 1).toInt)))
-      }
-      case 6 | 7 | 8 | 9 | ID_DURATION => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else java.lang.Long.valueOf(signedOf(c.bytes((tag - 1).toInt)))
-      }
-      case ID_TIME => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else {
-          val ns = signedOf(c.bytes((tag - 1).toInt))
-          if (nsTime) java.lang.Long.valueOf(ns)
-          else {
-            val ts = new java.sql.Timestamp(Math.floorDiv(ns, 1000000L))
-            ts.setNanos(Math.floorMod(ns, 1000000000L).toInt)
-            ts
-          }
-        }
-      }
-      case 14 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else java.lang.Double.valueOf(halfToDouble(unsignedOf(c.bytes((tag - 1).toInt)).toInt))
-      }
-      case ID_FLOAT32 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else java.lang.Double.valueOf(
-          java.lang.Float.intBitsToFloat(unsignedOf(c.bytes((tag - 1).toInt)).toInt).toDouble)
-      }
-      case ID_FLOAT64 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else java.lang.Double.valueOf(
-          java.lang.Double.longBitsToDouble(unsignedOf(c.bytes((tag - 1).toInt))))
-      }
-      case ID_BOOL => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else { val b = c.bytes((tag - 1).toInt); java.lang.Boolean.valueOf(b.nonEmpty && b(0) == 1) }
-      }
-      case ID_STRING => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else new String(c.bytes((tag - 1).toInt), "UTF-8")
-      }
-      case ID_BYTES => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else c.bytes((tag - 1).toInt)
-      }
-      case ID_IP => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else ipText(c.bytes((tag - 1).toInt))
-      }
-      case ID_NET => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else {
-          val b = c.bytes((tag - 1).toInt)
-          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-          ipText(addr) + "/" + leadingOnes(mask)
-        }
-      }
-      case ID_NULL => Some { c =>
-        val tag = c.uvarint(); if (tag != 0) c.pos += (tag - 1).toInt; null
-      }
-      case _ => None // uint64 (Decimal carrier), type values, decimals
-    }
-    case ZRecord(fields) => target match {
-      case st: StructType if st.fields.length == fields.length &&
-          st.fields.iterator.map(_.name).sameElements(fields.iterator.map(_._1)) =>
-        val subs = fields.zip(st.fields.toIndexedSeq)
-          .map { case ((_, ft), sf) => directFieldDecoder(ft, sf.dataType, nsTime) }
-        if (subs.exists(_.isEmpty)) None
-        else {
-          val ds = subs.map(_.get).toArray
-          Some { c =>
-            val tag = c.uvarint()
-            if (tag == 0) null
-            else {
-              val inner = new Cursor(c.buf, c.pos)
-              val end = c.pos + (tag - 1).toInt
-              c.pos = end
-              val arr = new Array[Any](ds.length)
-              var i = 0
-              while (i < ds.length) { arr(i) = ds(i)(inner); i += 1 }
-              Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-            }
-          }
-        }
-      case _ => None
-    }
-    case ZArray(e) => target match {
-      case ArrayType(et, _) => directFieldDecoder(e, et, nsTime).map { d => c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else {
-          val n = (tag - 1).toInt
-          val inner = new Cursor(c.bytes(n), 0)
-          val b = Vector.newBuilder[Any]
-          while (!inner.done) b += d(inner)
-          b.result()
-        }
-      }
-      case _ => None
-    }
-    case ZEnum(symbols) => Some { c =>
-      val tag = c.uvarint()
-      if (tag == 0) null else symbols(unsignedOf(c.bytes((tag - 1).toInt)).toInt)
-    }
-    case _ => None // sets (normalization reorders), maps, unions, errors
-  }
-
-  /** Top-level decoder for a single-shape stream: a record value straight
-    * to the tagged external Row, matching rowOf(decodeZValue(…)) exactly.
-    */
-  private def directTopDecoder(t: ZT, cleaned: StructType, shapeText: String,
-      nsTime: Boolean): Option[Cursor => Row] = {
-    if (ZType.fullText(zTypeOf(t)) != shapeText) return None
-    def stripNamed(x: ZT): ZT = x match { case ZNamed(_, i) => stripNamed(i); case o => o }
-    stripNamed(t) match {
-      case rec: ZRecord if rec.fields.nonEmpty =>
-        directFieldDecoder(rec, StructType(cleaned.fields), nsTime).map { d => c =>
-          d(c) match {
-            case r: Row => Row.fromSeq(r.toSeq :+ shapeText)
-            case _ => // null record value → all-null row (general-path parity)
-              Row.fromSeq(Vector.fill[Any](cleaned.fields.length)(null) :+ shapeText)
-          }
-        }
-      case _ => None
-    }
-  }
-
-  /** Decode a stream to tagged external Rows for a single-shape frame —
-    * the vectorized pass-2: no ZValue tree for eligible types; per-TYPE
-    * granular fallback through the value model otherwise.
-    */
-  private[sources] def decodeToRows(bytes: Array[Byte], shapeText: String,
-      cleaned: StructType, nsTime: Boolean): Iterator[Row] = new Iterator[Row] {
-    private val c = new Cursor(bytes, 0)
-    private var types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-    private var queue: Iterator[Row] = Iterator.empty
-    private val memo = scala.collection.mutable.HashMap.empty[ZT, Option[Cursor => Row]]
-    private def typeOfId(id: Int): ZT = if (id < 30) ZPrim(id) else types(id - 30)
-    // id-indexed front cache over `memo` (tree hashing per row otherwise);
-    // ids append-only within a stream, cleared with `types` at EOS
-    private var decodersById = new Array[Option[Cursor => Row]](64)
-    private def decoderOfId(id: Int): (ZT, Option[Cursor => Row]) = {
-      if (id >= decodersById.length)
-        decodersById = java.util.Arrays.copyOf(decodersById, math.max(id + 1, decodersById.length << 1))
-      val t = typeOfId(id)
-      var d = decodersById(id)
-      if (d == null) {
-        d = memo.getOrElseUpdate(t, directTopDecoder(t, cleaned, shapeText, nsTime))
-        decodersById(id) = d
-      }
-      (t, d)
-    }
-    private def fill(): Unit = {
-      while (!queue.hasNext && !c.done) {
-        val code = c.u8()
-        if (code == 0xff) {
-          types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-          decodersById = new Array[Option[Cursor => Row]](64)
-        }
-        else readFrame(c, code) match {
-          case (0, payload) => parseTypedefs(payload, types)
-          case (1, payload) =>
-            val vc = new Cursor(payload, 0)
-            val out = Vector.newBuilder[Row]
-            while (!vc.done) {
-              val tid = vc.uvarint().toInt
-              decoderOfId(tid) match {
-                case (_, Some(d)) => out += d(vc)
-                case (t, None) =>
-                  out += ZsonReader.rowOf(decodeZValue(vc, t, unionKeepsMember = false),
-                    cleaned, tag = true)
-              }
-            }
-            queue = out.result().iterator
-          case (2, _) => // control frame: skip
-          case _ =>
-            throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
-        }
-      }
-    }
-    def hasNext: Boolean = { if (!queue.hasNext) fill(); queue.hasNext }
-    def next(): Row = { if (!hasNext) throw new NoSuchElementException; queue.next() }
-  }
-
   // ---- InternalRow-native decoding (the DSv2 scan path) ---------------------
 
   /** External→Catalyst-internal converter for the value-model fallback
     * leaves (maps, sets, variants, type values): mirrors what Spark's own
     * Row→InternalRow conversion does over the frame's types.
     */
-  private[sources] def extToInternal(dt: DataType): Any => Any = dt match {
+  private[sources] def extToInternal(dt: DataType): Any => Any = extToInternal(dt, dt)
+
+  /** extToInternal of an external value built for type `from`, of which
+    * `dt` is a pruned view (Spark's nested column pruning): struct fields
+    * project by name, through arrays and map values.
+    */
+  private def extToInternal(dt: DataType, from: DataType): Any => Any = dt match {
     case StringType => v => UTF8String.fromString(v.toString)
     case TimestampType => { v =>
       val inst = v.asInstanceOf[java.sql.Timestamp].toInstant
@@ -2185,24 +1862,28 @@ object ZngIO {
       java.lang.Integer.valueOf(v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
     case d: DecimalType => v => Decimal(v.asInstanceOf[java.math.BigDecimal])
     case st: StructType =>
-      val subs = st.fields.map(f => extToInternal(f.dataType))
+      val fs = from match { case f: StructType => f; case _ => st }
+      val src = if (fs == st) st.fields.indices.toArray else st.fieldNames.map(fs.fieldIndex)
+      val subs = st.fields.indices.map(i =>
+        extToInternal(st.fields(i).dataType, fs.fields(src(i)).dataType)).toArray
       v => {
         val r = v.asInstanceOf[Row]
         val arr = new Array[Any](subs.length)
         var i = 0
         while (i < subs.length) {
-          val x = r.get(i)
+          val x = r.get(src(i))
           arr(i) = if (x == null) null else subs(i)(x)
           i += 1
         }
         new GenericInternalRow(arr)
       }
     case ArrayType(et, _) =>
-      val sub = extToInternal(et)
+      val sub = extToInternal(et, from match { case ArrayType(fe, _) => fe; case _ => et })
       v => new GenericArrayData(v.asInstanceOf[scala.collection.Seq[Any]].iterator
         .map(x => if (x == null) null else sub(x)).toArray)
     case MapType(kt, vt, _) =>
-      val ks = extToInternal(kt); val vs = extToInternal(vt)
+      val ks = extToInternal(kt)
+      val vs = extToInternal(vt, from match { case MapType(_, fv, _) => fv; case _ => vt })
       v => {
         val es = v.asInstanceOf[scala.collection.Map[Any, Any]].toSeq
         new ArrayBasedMapData(
@@ -2230,21 +1911,26 @@ object ZngIO {
     case _ => identity // Long, Double, Boolean, Array[Byte] ride unchanged
   }
 
-  /** Wire→internal decoder for one field — the DSv2 twin of
-    * directFieldDecoder, total over all types: exotic leaves (sets, maps,
-    * unions/errors, type values, decimals) route through the value model
-    * inline and convert, everything else decodes straight off the cursor.
+  /** Wire→internal decoder for one field of wire type `t0` into the slot
+    * type `target`, a pruned view of the frame's `full` type for the
+    * field. Total over all types, and it works on the frame's bytes:
+    * leaves decode in place, records decode the requested sub-fields by
+    * name and skip the rest by their length tags. Exotic leaves (sets,
+    * maps, unions/errors, type values, decimals) and conflict-variant
+    * targets go through the value model against `full`, then project
+    * down to `target`.
     */
-  private def internalFieldDecoder(t0: ZT, target: DataType, nsTime: Boolean): Cursor => Any = {
+  private def internalFieldDecoder(t0: ZT, target: DataType, full: DataType,
+      nsTime: Boolean): Cursor => Any = {
     def fallback: Cursor => Any = {
-      val conv = extToInternal(target)
+      val conv = extToInternal(target, full)
       c => {
-        val ext = ZValue.toExternal(decodeZValue(c, t0, unionKeepsMember = false), target)
+        val ext = ZValue.toExternal(decodeZValue(c, t0, unionKeepsMember = false), full)
         if (ext == null) null else conv(ext)
       }
     }
     t0 match {
-      case ZNamed(_, inner) => internalFieldDecoder(inner, target, nsTime) // no own tag
+      case ZNamed(_, inner) => internalFieldDecoder(inner, target, full, nsTime) // no own tag
       case ZPrim(id) => (id, target) match {
         case (0 | 1 | 2, LongType) => c => {
           val tag = c.uvarint()
@@ -2308,28 +1994,26 @@ object ZngIO {
           val tag = c.uvarint()
           if (tag == 0) null else c.bytes((tag - 1).toInt)
         }
-        case (ID_IP, StringType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null else UTF8String.fromString(ipText(c.bytes((tag - 1).toInt)))
-        }
-        case (ID_NET, StringType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else {
-            val b = c.bytes((tag - 1).toInt)
-            val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-            val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-            UTF8String.fromString(ipText(addr) + "/" + leadingOnes(mask))
+        case (ID_IP | ID_NET, StringType) =>
+          val net = id == ID_NET
+          val text = new Array[Byte](AddrTextMax) // decoders are per-reader
+          c => {
+            val tag = c.uvarint()
+            if (tag == 0) null
+            else {
+              val n = (tag - 1).toInt
+              val end = writeAddrText(c.buf, c.pos, n, net, text, 0)
+              c.pos += n
+              UTF8String.fromBytes(java.util.Arrays.copyOf(text, end))
+            }
           }
-        }
         case (3, _: DecimalType) => c => { // uint64 full-range carrier
           val tag = c.uvarint()
           if (tag == 0) null
           else {
-            val b = c.bytes((tag - 1).toInt)
-            var x = BigInt(0)
-            for (i <- b.indices.reverse) x = (x << 8) | (b(i) & 0xff)
-            Decimal(scala.math.BigDecimal(x), 20, 0)
+            val u = c.unsignedAt((tag - 1).toInt)
+            if (u >= 0) Decimal(u, 20, 0) // compact: no BigInteger below 2^63
+            else Decimal(BigDecimal(BigInt(u) + TwoTo64), 20, 0)
           }
         }
         case (ID_NULL, _) => c => {
@@ -2337,20 +2021,18 @@ object ZngIO {
         }
         case _ => fallback
       }
-      case ZRecord(fields) => target match {
-        case st: StructType if st.fields.length == fields.length &&
-            st.fields.iterator.map(_.name).sameElements(fields.iterator.map(_._1)) =>
-          val ds = fields.zip(st.fields.toIndexedSeq)
-            .map { case ((_, ft), sf) => internalFieldDecoder(ft, sf.dataType, nsTime) }.toArray
+      case ZRecord(fields) => (target, full) match {
+        // by-name projection into the (possibly pruned) struct: requested
+        // sub-fields the wire record lacks stay null
+        case (st: StructType, fs: StructType) if !ZsonIO.isVariantType(fs) =>
+          val body = new RecordBody(fields, st, fs(_).dataType, nsTime)
+          val width = st.fields.length
           c => {
             val tag = c.uvarint()
             if (tag == 0) null
             else {
-              val inner = new Cursor(c.buf, c.pos)
-              c.pos += (tag - 1).toInt
-              val arr = new Array[Any](ds.length)
-              var i = 0
-              while (i < ds.length) { arr(i) = ds(i)(inner); i += 1 }
+              val arr = new Array[Any](width)
+              body.decode(c, c.pos + (tag - 1).toInt, arr)
               new GenericInternalRow(arr)
             }
           }
@@ -2358,14 +2040,15 @@ object ZngIO {
       }
       case ZArray(e) => target match {
         case ArrayType(et, _) =>
-          val d = internalFieldDecoder(e, et, nsTime)
+          val d = internalFieldDecoder(e, et,
+            full match { case ArrayType(fe, _) => fe; case _ => et }, nsTime)
           c => {
             val tag = c.uvarint()
             if (tag == 0) null
             else {
-              val inner = new Cursor(c.bytes((tag - 1).toInt), 0)
+              val end = c.pos + (tag - 1).toInt
               val b = scala.collection.mutable.ArrayBuffer.empty[Any]
-              while (!inner.done) b += d(inner)
+              while (c.pos < end) b += d(c)
               new GenericArrayData(b.toArray)
             }
           }
@@ -2375,10 +2058,39 @@ object ZngIO {
         val syms = symbols.map(UTF8String.fromString).toArray
         c => {
           val tag = c.uvarint()
-          if (tag == 0) null else syms(unsignedOf(c.bytes((tag - 1).toInt)).toInt)
+          if (tag == 0) null else syms(c.unsignedAt((tag - 1).toInt).toInt)
         }
       case _ => fallback // sets (normalization reorders), maps, unions, errors,
                          // and any leaf whose target is a conflict variant
+    }
+  }
+
+  private val TwoTo64 = BigInt(1) << 64
+
+  /** Body decoder for a wire record projected BY NAME into the slots of
+    * `into`: requested fields decode in place, the others skip by their
+    * length tags, and nothing past the last requested field is read (the
+    * cursor jumps to the body's end). `fullOf` gives a slot's unpruned
+    * frame type.
+    */
+  private final class RecordBody(fields: Seq[(String, ZT)], into: StructType,
+      fullOf: String => DataType, nsTime: Boolean) {
+    private val outs = fields.map { case (name, _) => into.fieldNames.indexOf(name) }
+      .take(fields.lastIndexWhere { case (name, _) => into.fieldNames.contains(name) } + 1)
+      .toArray
+    private val ds: Array[Cursor => Any] = outs.indices.map { i =>
+      if (outs(i) < 0) null
+      else internalFieldDecoder(fields(i)._2, into.fields(outs(i)).dataType,
+        fullOf(fields(i)._1), nsTime)
+    }.toArray
+    def decode(c: Cursor, end: Int, arr: Array[Any]): Unit = {
+      var i = 0
+      while (i < ds.length) {
+        if (ds(i) != null) arr(outs(i)) = ds(i)(c)
+        else { val t = c.uvarint(); if (t != 0) c.pos += (t - 1).toInt }
+        i += 1
+      }
+      c.pos = end
     }
   }
 
@@ -2440,30 +2152,12 @@ object ZngIO {
           stripNamed(t) match {
             case ZRecord(fields) if fields.nonEmpty &&
                 fields.forall { case (n, _) => cleaned.fieldNames.contains(n) } =>
-              val reqCount = fields.count(f => required.fieldNames.contains(f._1))
-              val acts: Array[(Cursor, Array[Any]) => Unit] =
-                fields.map { case (name, ft) =>
-                  val out = required.fieldNames.indexOf(name)
-                  if (out < 0) { (cc: Cursor, _: Array[Any]) =>
-                    val tag = cc.uvarint(); if (tag != 0) cc.pos += (tag - 1).toInt
-                  } else {
-                    val d = internalFieldDecoder(ft, required.fields(out).dataType, nsTime)
-                    (cc: Cursor, arr: Array[Any]) => arr(out) = d(cc)
-                  }
-                }.toArray
+              val body = new RecordBody(fields, required, cleaned(_).dataType, nsTime)
               Some { cc =>
                 val arr = new Array[Any](width)
                 val tag = cc.uvarint()
                 if (tagIdx >= 0) arr(tagIdx) = if (tag == 0) nullTagVal else tagVal
-                if (tag != 0) {
-                  if (reqCount == 0) cc.pos += (tag - 1).toInt
-                  else {
-                    val inner = new Cursor(cc.buf, cc.pos)
-                    cc.pos += (tag - 1).toInt
-                    var i = 0
-                    while (i < acts.length) { acts(i)(inner, arr); i += 1 }
-                  }
-                }
+                if (tag != 0) body.decode(cc, cc.pos + (tag - 1).toInt, arr)
                 new GenericInternalRow(arr)
               }
             case _ => None
@@ -2644,7 +2338,7 @@ object ZngIO {
         val tag = c.uvarint()
         if (tag == 0) { vec.appendNull(); () }
         else {
-          val s = syms(unsignedOf(c.bytes((tag - 1).toInt)).toInt)
+          val s = syms(c.unsignedAt((tag - 1).toInt).toInt)
           vec.appendByteArray(s, 0, s.length); ()
         }
       }
@@ -2703,25 +2397,19 @@ object ZngIO {
           c.pos += n; ()
         }
       }
-      case (ID_IP, StringType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val s = ipText(c.bytes((tag - 1).toInt)).getBytes("UTF-8")
-          vec.appendByteArray(s, 0, s.length); ()
+      case (ID_IP | ID_NET, StringType) =>
+        val net = id == ID_NET
+        val text = new Array[Byte](AddrTextMax) // appendByteArray copies it
+        Some { c =>
+          val tag = c.uvarint()
+          if (tag == 0) { vec.appendNull(); () }
+          else {
+            val n = (tag - 1).toInt
+            val end = writeAddrText(c.buf, c.pos, n, net, text, 0)
+            c.pos += n
+            vec.appendByteArray(text, 0, end); ()
+          }
         }
-      }
-      case (ID_NET, StringType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val b = c.bytes((tag - 1).toInt)
-          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-          val s = (ipText(addr) + "/" + leadingOnes(mask)).getBytes("UTF-8")
-          vec.appendByteArray(s, 0, s.length); ()
-        }
-      }
       case (ID_NULL, _) => Some { c =>
         val tag = c.uvarint()
         if (tag != 0) c.pos += (tag - 1).toInt
@@ -2737,17 +2425,17 @@ object ZngIO {
           val tag = c.uvarint()
           if (tag == 0) { vec.appendNull(); () }
           else {
-            val body = new Cursor(c.bytes((tag - 1).toInt), 0)
-            val probe = new Cursor(body.buf, 0)
+            val end = c.pos + (tag - 1).toInt
+            val probe = new Cursor(c.buf, c.pos)
             var n = 0
-            while (!probe.done) {
+            while (probe.pos < end) {
               val t2 = probe.uvarint()
               if (t2 != 0) probe.pos += (t2 - 1).toInt
               n += 1
             }
             vec.appendArray(n): Unit
             var i = 0
-            while (i < n) { elemApp(body); i += 1 }
+            while (i < n) { elemApp(c); i += 1 }
           }
         }
       case _ => None
@@ -2765,11 +2453,11 @@ object ZngIO {
             val tag = c.uvarint()
             if (tag == 0) { vec.appendStruct(true); () }
             else {
-              val inner = new Cursor(c.buf, c.pos)
-              c.pos += (tag - 1).toInt
+              val end = c.pos + (tag - 1).toInt
               vec.appendStruct(false): Unit
               var i = 0
-              while (i < apps.length) { apps(i)(inner); i += 1 }
+              while (i < apps.length) { apps(i)(c); i += 1 }
+              c.pos = end
             }
           }
         }

@@ -182,4 +182,29 @@ class HetSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(zv.get(col("v"), "o").getField("m").isNotNull).head.getBoolean(0)
     assert(childM, "nested record hit must carry a derived m cache")
   }
+
+  test("a union column read from zng answers when only part of its " +
+       "variant is selected (typeof alone, len in a where)") {
+    // v is int64, string, record or array by row: one variant column
+    val lines = (0 until 80).map { i =>
+      val v = i % 4 match {
+        case 0 => s"$i"
+        case 1 => s""""s$i""""
+        case 2 => s"""{x:$i,y:"y$i"}"""
+        case _ => s"[$i,${i + 1},${i + 2}]"
+      }
+      s"{i:$i,v:$v}"
+    }
+    val path = java.nio.file.Files.createTempDirectory("graft-het-union").resolve("u.zng")
+    java.nio.file.Files.write(path, graft.sources.ZngIO.encodeTypedStream(
+      lines.map(l => graft.sources.ZsonParser.parseAll(l).head)))
+    val df = graft.sources.ZngIO.read(spark, path.toString)
+    val types = df.orderBy("i").select(Het.variantTypeOf(col("v"))).collect().map(_.getString(0))
+    assert(types.toSeq == (0 until 80).map(i =>
+      Seq("int64", "string", "{x:int64,y:string}", "[int64]")(i % 4)))
+    val n = graft.lang.Graft.query(spark, "", s"from '$path' | where len(v)==3 | count()")
+      .collect().head.getLong(0)
+    // three-byte strings and the three-element arrays
+    assert(n == (0 until 80).count(i => i % 4 == 3 || (i % 4 == 1 && s"s$i".length == 3)))
+  }
 }

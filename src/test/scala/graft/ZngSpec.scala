@@ -478,6 +478,183 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
       "{a:200(uint8),b:70000(uint32),c:5(uint64)}"))
   }
 
+  /** The String-built address text the byte kernel replaced: the oracle
+    * for the ip/net differential below.
+    */
+  private def refIpText(b: Array[Byte]): String =
+    if (b.length == 4) b.map(_ & 0xff).mkString(".")
+    else {
+      val groups = Array.tabulate(8)(i => ((b(2 * i) & 0xff) << 8) | (b(2 * i + 1) & 0xff))
+      var bestStart = -1; var bestLen = 0; var i = 0
+      while (i < 8) {
+        if (groups(i) == 0) {
+          var j = i; while (j < 8 && groups(j) == 0) j += 1
+          if (j - i > bestLen) { bestStart = i; bestLen = j - i }
+          i = j
+        } else i += 1
+      }
+      if (bestLen < 2) groups.map(Integer.toHexString).mkString(":")
+      else groups.take(bestStart).map(Integer.toHexString).mkString(":") + "::" +
+        groups.drop(bestStart + bestLen).map(Integer.toHexString).mkString(":")
+    }
+
+  private def maskOf(len: Int, bits: Int): Array[Byte] =
+    Array.tabulate(len)(i => ((0xff << (8 - math.max(0, math.min(8, bits - 8 * i)))) & 0xff).toByte)
+
+  /** One ZNG stream of `{i:int64,a:ip,n:net}` records with raw ip and net
+    * bodies (null = a null field).
+    */
+  private def addrStream(rows: Seq[(Array[Byte], Array[Byte])]): Array[Byte] = {
+    import java.io.ByteArrayOutputStream
+    val defs = new ByteArrayOutputStream()
+    defs.write(0x00); ZngIO.uvarint(defs, 3)
+    Seq("i" -> 9, "a" -> 26, "n" -> 27).foreach { case (name, id) =>
+      ZngIO.uvarint(defs, 1); defs.write(name.charAt(0).toInt); ZngIO.uvarint(defs, id.toLong)
+    }
+    val vals = new ByteArrayOutputStream()
+    rows.zipWithIndex.foreach { case ((a, n), i) =>
+      val body = new ByteArrayOutputStream()
+      (Seq(ZngIO.signedBytes(i.toLong), a, n)).foreach { f =>
+        if (f == null) body.write(0) else { ZngIO.uvarint(body, f.length + 1L); body.write(f) }
+      }
+      ZngIO.uvarint(vals, 30); ZngIO.uvarint(vals, body.size + 1L); body.writeTo(vals)
+    }
+    val out = new ByteArrayOutputStream()
+    Seq(0 -> defs.toByteArray, 1 -> vals.toByteArray).foreach { case (t, p) =>
+      out.write((t << 4) | (p.length & 0xf))
+      ZngIO.uvarint(out, (p.length >> 4).toLong)
+      out.write(p, 0, p.length)
+    }
+    out.write(0xff)
+    out.toByteArray
+  }
+
+  test("ip and net leaves: the byte kernel matches the String reference " +
+       "on every IPv6 zero-run shape, in the row and vectorized scans") {
+    def v6(groups: Int*): Array[Byte] =
+      groups.flatMap(g => Seq((g >> 8).toByte, g.toByte)).toArray
+    val fixed = Seq(
+      Array[Byte](0, 0, 0, 0), Array.fill[Byte](4)(-1), Array(10, 0, 12, 199).map(_.toByte),
+      v6(0x2001, 0xdb8, 0x85a3, 0x1, 0x2, 0x8a2e, 0x370, 0x7334), // no zero run
+      v6(0x2001, 0xdb8, 0, 0x1, 0x2, 0x8a2e, 0x370, 0x7334),      // one zero group stays
+      v6(0, 0, 0, 0, 0, 0, 0, 1),                                  // leading ::
+      v6(0xfe80, 0, 0, 0, 0x202, 0xb3ff, 0xfe1e, 0x8329),          // middle ::
+      v6(0x2001, 0xdb8, 0, 0, 0, 0, 0, 0),                         // trailing ::
+      v6(0, 0, 0, 0, 0, 0, 0, 0),                                  // all zero
+      v6(0x2001, 0, 0, 0x1, 0, 0, 0x1, 0x1),                       // tie: first run
+      v6(0x2001, 0, 0, 0x1, 0, 0, 0, 0x1),                         // longer later run
+      v6(0xffff, 0xffff, 0xffff, 0xffff, 0xffff, 0xffff, 0xffff, 0xffff))
+    val rnd = new scala.util.Random(7)
+    val random = (0 until 2000).map { _ =>
+      if (rnd.nextBoolean()) Array.fill(4)(rnd.nextInt(256).toByte)
+      else v6((0 until 8).map(_ => if (rnd.nextInt(3) == 0) 0 else rnd.nextInt(65536)): _*)
+    }
+    val addrs = fixed ++ random
+    val bits = addrs.map(a => rnd.nextInt(a.length * 8 + 1))
+    addrs.zip(bits).foreach { case (a, k) =>
+      assert(ZngIO.addrText(a, net = false) == refIpText(a))
+      assert(ZngIO.addrText(a ++ maskOf(a.length, k), net = true) == s"${refIpText(a)}/$k")
+    }
+    // the scan leaves, nulls included
+    val path = tmp("zng-addr")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    val rows = addrs.zip(bits).map { case (a, k) => (a, a ++ maskOf(a.length, k)) } :+ ((null, null))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "p.zng"), addrStream(rows))
+    val expected = addrs.zip(bits).map { case (a, k) =>
+      Row(refIpText(a), s"${refIpText(a)}/$k") } :+ Row(null, null)
+    def scan() = ZngIO.read(spark, path).orderBy("i").select("a", "n")
+    val vec = scan()
+    assert(vec.queryExecution.executedPlan.toString.contains("vectorized"))
+    assert(vec.collect().toSeq == expected)
+    spark.conf.set("graft.zng.vectorized", "false")
+    try assert(scan().collect().toSeq == expected)
+    finally spark.conf.unset("graft.zng.vectorized")
+  }
+
+  test("uint64 leaves decode to the exact Decimal at 0, 2^63-1, 2^63, " +
+       "2^64-1 and null, agreeing with the value-model path") {
+    val us = Seq("0", "1", "255", "9223372036854775807", "9223372036854775808",
+      "18446744073709551614", "18446744073709551615")
+    val lines = us.zipWithIndex.map { case (u, i) => s"{i:$i,u:$u(uint64)}" } :+
+      s"{i:${us.length},u:null(uint64)}"
+    val path = tmp("zng-u64")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    val bytes = ZngIO.encodeTypedStream(lines.map(l => graft.sources.ZsonParser.parseAll(l).head))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "p.zng"), bytes)
+    val df = ZngIO.read(spark, path)
+    assert(df.schema("u").dataType == DecimalType(20, 0))
+    val got = df.orderBy("i").select("u").collect().toSeq.map(_.getDecimal(0))
+    assert(got == us.map(new java.math.BigDecimal(_)) :+ null)
+    val cleaned = StructType(df.schema.filterNot(_.name == graft.operators.Het.typeTag))
+    val viaValues = ZngIO.decodeToZValues(bytes).toSeq.map(v =>
+      graft.sources.ZValue.toExternal(v, cleaned).asInstanceOf[Row]
+        .getAs[java.math.BigDecimal](cleaned.fieldIndex("u")))
+    assert(got == viaValues)
+  }
+
+  test("a pruned nested record decodes directly, for every sub-field set " +
+       "Spark can request, agreeing with the value-model path") {
+    val lines = (0 until 60).map { i =>
+      val id =
+        if (i % 11 == 0) "null({orig_h:ip,orig_p:uint16,resp_h:ip,resp_p:uint16})"
+        else {
+          val oh = if (i % 7 == 0) "null(ip)" else s"10.0.${i % 5}.$i"
+          val rh = if (i % 3 == 0) s"fe80::${i.toHexString}" else s"52.85.83.$i"
+          val rp = if (i % 13 == 0) "null(uint16)" else s"${443 + i}(uint16)"
+          s"{orig_h:$oh,orig_p:${1000 + i}(uint16),resp_h:$rh,resp_p:$rp}"
+        }
+      s"""{i:$i,id:$id,s:"x$i"}"""
+    }
+    val path = tmp("zng-pruned")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    val bytes = ZngIO.encodeTypedStream(lines.map(l => graft.sources.ZsonParser.parseAll(l).head))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "p.zng"), bytes)
+    val df = ZngIO.read(spark, path)
+    val cleaned = StructType(df.schema.filterNot(_.name == graft.operators.Het.typeTag))
+    val viaValues = ZngIO.decodeToZValues(bytes).toSeq
+      .map(v => graft.sources.ZValue.toExternal(v, cleaned).asInstanceOf[Row])
+    val names = Seq("orig_h", "orig_p", "resp_h", "resp_p")
+    val subsets = (1 to names.length).flatMap(names.combinations)
+    for (sub <- subsets; order <- Seq(sub, sub.reverse)) {
+      val q = df.select(col("i") +: order.map(f => col(s"id.$f")): _*)
+      // the scan is asked for the pruned struct, in the record's order
+      val requested = q.queryExecution.sparkPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.readSchema()("id").dataType.asInstanceOf[StructType].fieldNames.toSeq
+      }
+      assert(requested.contains(sub), s"id.{${order.mkString(",")}}")
+      val got = q.collect().toSeq.sortBy(_.getLong(0))
+      val idType = cleaned("id").dataType.asInstanceOf[StructType]
+      val expected = viaValues.map { r =>
+        val id = r.getAs[Row](cleaned.fieldIndex("id"))
+        Row.fromSeq(r.getAs[Long](cleaned.fieldIndex("i")) +:
+          order.map(f => if (id == null) null else id.get(idType.fieldIndex(f))))
+      }
+      assert(got == expected, s"id.{${order.mkString(",")}}")
+    }
+  }
+
+  test("zng scans report their task input bytes") {
+    val path = tmp("zng-input-bytes")
+    ZngIO.write(GraftSession.table(spark, dir, "nation"), path)
+    val read = new java.util.concurrent.atomic.LongAdder
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.add(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    val df = ZngIO.read(spark, path)
+    val fileBytes = new java.io.File(path).listFiles().filter(_.getName.endsWith(".zng"))
+      .map(_.length).sum
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      // task-end events reach listeners asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (read.sum < fileBytes && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(read.sum >= fileBytes, s"read ${read.sum} of $fileBytes bytes")
+  }
+
   test("uint64 above 2^63-1 keeps its exact value through the Decimal " +
        "carrier: zson render, zng round-trip, and sums (value.go uint64)") {
     val spark = GraftSession.local(4)
